@@ -2,7 +2,7 @@
 
 Everything the program under test sees is made here from the seed:
 
-- a base fixture with the driver's ten tables (TPC-H-shaped star schema,
+- a base fixture with the ten tables of ``TESTDATA.md`` (TPC-H-shaped star schema,
   ``events``, ``documents``, ``embeddings``), written by NumPy/pyarrow;
 - the measured fixture, derived from the base by the repository's own
   ``tools/make_scaled_fixture.py`` (replication with per-copy key offsets);
@@ -42,7 +42,7 @@ REGIONS = ("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 EMB_DIM = 64
 
-# Row counts at sf1, the proportions of the driver's fixtures.
+# Row counts at sf1, in the proportions of the fixtures in TESTDATA.md.
 ROWS_AT_SF1 = {
     "customer": 150_000,
     "supplier": 10_000,
@@ -103,7 +103,7 @@ def make_documents(rng: np.random.Generator, n: int, first_id: int = 0,
 
 
 def base_tables(seed: int, sf: float) -> dict[str, pa.Table]:
-    """The driver's ten fixture tables at scale factor ``sf``."""
+    """The ten fixture tables of TESTDATA.md at scale factor ``sf``."""
     rng = np.random.default_rng(seed)
     n = {t: max(1, int(r * sf)) for t, r in ROWS_AT_SF1.items()}
     t: dict[str, pa.Table] = {}
