@@ -10,9 +10,10 @@ standard output is one JSON object with the keys ``correct``,
 the spans and per-operation engine totals) is written under
 ``.perfbench/records/``.
 
-Load: one Python process driving Spark ``local[N]``, N = the cores this
-process may use; a closed loop with one client, each operation starting
-when the previous one has returned. The only extra thread samples memory.
+Load: one Python process driving Spark ``local[N]``, N = half the cores
+this process may use; a closed loop with one client, each operation
+starting when the previous one has returned. The only extra thread
+samples memory.
 """
 
 from __future__ import annotations
@@ -21,7 +22,9 @@ import argparse
 import json
 import os
 import shutil
+import signal
 import statistics
+import subprocess
 import sys
 import threading
 import time
@@ -32,9 +35,10 @@ HERE = Path(__file__).resolve().parent
 BENCHMARK = HERE.parent / "BENCHMARK.json"
 sys.path.insert(0, str(HERE))
 
-# A single measured pass right after the warm-up varied by up to 25%
-# between runs; the median of two halves that.
-MIN_PASSES = 2
+# Passes keep getting faster for several passes after the warm-up (the
+# first measured one up to 40% slower than the third); the median of
+# four averages the two middle ones and leaves the first out.
+MIN_PASSES = 4
 DRIVER_MEM = "2g"
 
 
@@ -130,6 +134,54 @@ class RssSampler(threading.Thread):
         return max(vals) / 2**20 if vals else 0.0
 
 
+def _alive(pid: int) -> bool:
+    """Whether ``pid`` exists and is not a zombie."""
+    try:
+        return _stat_fields(pid)[0] != "Z"
+    except (OSError, IndexError):
+        return False
+
+
+def stop_spark(spark) -> None:
+    """Stop the session, then end the gateway JVM and its Python workers
+    and wait until each has gone. Left to exit with this process, the
+    JVM outlived it by 30-50 s."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    proc = getattr(gateway, "proc", None)
+    pids = process_tree(proc.pid) if proc is not None else []
+    try:
+        if spark is not None:
+            spark.stop()
+    finally:
+        if proc is None:
+            return
+        gateway.shutdown()
+        SparkContext._gateway = SparkContext._jvm = None
+        pids = list(dict.fromkeys(pids + process_tree(proc.pid)))
+        try:
+            proc.stdin.close()
+        except OSError:
+            pass
+        try:
+            proc.wait(timeout=5)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+        # workers the JVM forked are not our children: signal, then poll
+        for sig in (signal.SIGTERM, signal.SIGKILL):
+            for pid in pids:
+                if pid != proc.pid and _alive(pid):
+                    try:
+                        os.kill(pid, sig)
+                    except OSError:
+                        pass
+            end = time.monotonic() + 5
+            while any(_alive(p) for p in pids if p != proc.pid) and time.monotonic() < end:
+                time.sleep(0.05)
+
+
 def spin(seconds: float) -> None:
     """Busy-wait: an injected slowdown that costs CPU as well as time."""
     end = time.perf_counter() + seconds
@@ -188,7 +240,10 @@ def main(argv=None) -> int:
     work = repo / ".perfbench" / f"{args.workload}-{args.seed}-{os.getpid()}"
     for sub in ("tmp", "spark-local", "eventlog"):
         (work / sub).mkdir(parents=True, exist_ok=True)
-    cores = len(os.sched_getaffinity(0))
+    # Spark task threads, their Python workers, GC and JIT threads on
+    # every core of a shared host made the runs follow the neighbours'
+    # load; on half the cores the passes took as long and varied less.
+    cores = max(1, len(os.sched_getaffinity(0)) // 2)
     os.environ.update({
         "SPARK_GRAFT_CPUS": str(cores),
         "SPARK_GRAFT_DRIVER_MEM": DRIVER_MEM,
@@ -197,6 +252,10 @@ def main(argv=None) -> int:
         "SPARK_LOCAL_DIRS": str(work / "spark-local"),
         "PYSPARK_PYTHON": sys.executable,
         "PYSPARK_DRIVER_PYTHON": sys.executable,
+        # one BLAS thread per Python worker: a worker is one task slot
+        "OPENBLAS_NUM_THREADS": "1",
+        "OMP_NUM_THREADS": "1",
+        "MKL_NUM_THREADS": "1",
     })
     import tempfile
 
@@ -254,11 +313,12 @@ def run(args, repo: Path, work: Path, cores: int) -> int:
         pass_cpu: list[float] = []
         errors: list[str] = []
         run_start = time.time()
-        deadline = time.perf_counter() + args.seconds
-        pass_no = 0
-        # whole passes, at least MIN_PASSES; another only if it should
-        # end inside the window
-        while pass_no < MIN_PASSES or time.perf_counter() + pass_times[-1] <= deadline:
+        # a fixed number of whole passes, sized from --seconds by the
+        # workload's pass time on the reference host: a count that
+        # followed the clock would measure fewer and colder passes while
+        # the host is slow, and so widen the spread between runs
+        n_passes = max(MIN_PASSES, round(args.seconds / wl.pass_s))
+        for pass_no in range(n_passes):
             rng = np.random.default_rng([args.seed, pass_no])
             ops = wl.ops(pass_no, rng)
             p0 = time.perf_counter()
@@ -283,7 +343,6 @@ def run(args, repo: Path, work: Path, cores: int) -> int:
                                 "pass": pass_no, "s": dt, "cpu_s": c1 - c0, "ok": ok})
             pass_times.append(time.perf_counter() - p0)
             pass_cpu.append(cpu_seconds(jvm) - pc0)
-            pass_no += 1
         run_end = time.time()
         udf_s = udf_profile_seconds(ctx.spark, repo, work) if tracer.enabled else 0.0
         tracer.unpatch()
@@ -291,8 +350,7 @@ def run(args, repo: Path, work: Path, cores: int) -> int:
         checks = wl.check()
         layer_extra = wl.layer_metrics() if tracer.enabled else {}
     finally:
-        if ctx.spark is not None:
-            ctx.spark.stop()
+        stop_spark(ctx.spark)
         sampler.stop()
 
     failed_checks = [c for c in checks if not c[1]]

@@ -9,7 +9,7 @@ and a set in which ``run.py --slow`` stretches one operation by 1.3x. The
 operation is ``dedup_minhash_lsh_pairs``, whose run-to-run spread is the
 lowest of the workload's reads, and the median read, so the slowdown
 should show both as that operation and as ``query_p50_s``. It takes about
-six minutes on a 4-core host.
+eight minutes on a 4-vCPU host.
 """
 
 from __future__ import annotations

@@ -61,6 +61,9 @@ class Catalog:
 
     writes: tuple[str, ...] = ()
     reads: tuple[str, ...] = ()
+    # seconds one warm pass takes on the reference host (4 vCPU,
+    # local[2]); run.py sizes a run's pass count from it
+    pass_s: float
 
     def __init__(self, ctx):
         self.ctx = ctx
@@ -134,6 +137,7 @@ class Etl(Catalog):
 
     writes = ETL_SERVING
     reads = ETL_ADHOC
+    pass_s = 3.5
 
 
 class Curation(Catalog):
@@ -143,6 +147,7 @@ class Curation(Catalog):
 
     writes = CURATION_WRITES
     reads = CURATION_READS
+    pass_s = 5.5
 
     def prepare(self) -> None:
         super().prepare()
@@ -280,6 +285,8 @@ DOC_SCHEMA = "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BI
 class Lakehouse:
     """Streaming ingest into ``VersionedTable`` ledgers with DML and
     reads on a docs table interleaved between micro-batches."""
+
+    pass_s = 7.5
 
     def __init__(self, ctx):
         self.ctx = ctx
